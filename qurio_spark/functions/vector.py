@@ -50,18 +50,20 @@ def literal_vector(vec: list[float]) -> Column:
     site.  ``repr(float)`` round-trips IEEE doubles exactly and Spark
     parses them with Java ``Double.parseDouble``, so the literal
     values are bit-identical to the composed form (the score oracles'
-    hash identity is preserved).  Non-finite values fall back to the
-    composed form (no SQL literal spells nan/inf)."""
+    hash identity is preserved).  The one exception is negative zero:
+    SQL reads ``-0.0`` as a negated DECIMAL zero, which has no sign,
+    so it is spelled as a string cast that keeps the sign bit.
+    Non-finite values fall back to the composed form (no SQL literal
+    spells nan/inf)."""
     vals = [float(v) for v in vec]
     import math
 
     if not vals or not all(math.isfinite(v) for v in vals):
         return F.array(*[F.lit(v) for v in vals])
-    return F.expr(
-        "array(" + ",".join(f"CAST({v!r} AS DOUBLE)" for v in vals) + ")"
-    )
 
+    def _sql(v: float) -> str:
+        if v == 0.0 and math.copysign(1.0, v) < 0:
+            return "CAST('-0.0' AS DOUBLE)"
+        return f"CAST({v!r} AS DOUBLE)"
 
-def l2_normalize(a: Column) -> Column:
-    n = norm(a)
-    return F.when(n > 0, F.transform(a, lambda x: (x.cast("double") / n).cast("float"))).otherwise(a)
+    return F.expr("array(" + ",".join(_sql(v) for v in vals) + ")")

@@ -120,11 +120,12 @@ def hybrid_search(
     # Sparse keyword scores LEFT-joined onto the candidate set (docs
     # matching no query term keep bm25 = 0.0): one copy of the
     # candidate scan, not the dense join-back shape.
-    if bm25_index is not None and not filters:
-        kw = bm25_op.score_query_prebuilt(bm25_index, query_text)
-    else:
-        idx = bm25_op.build_index(cand, id_col, text_col)
-        kw = bm25_op.score_query(idx, query_text)
+    kw = bm25_op.score_query(
+        bm25_index
+        if bm25_index is not None and not filters
+        else bm25_op.build_index(cand, id_col, text_col),
+        query_text,
+    )
     scored = (
         cand.join(kw, id_col, "left")
         .withColumn("bm25", F.coalesce(F.col("bm25"), F.lit(0.0)))
@@ -253,7 +254,7 @@ def _batch_keyword_scores(
     postings carry the ``term_bucket`` partition column, the batch's
     query terms are collected driver-side (the query table is small by
     definition) and hashed to bucket literals, so the postings scan is
-    directory-pruned exactly like bm25.score_query_prebuilt."""
+    directory-pruned exactly like bm25.score_query."""
     from qurio_spark.functions.text import tokenize
 
     if index is None:
@@ -273,10 +274,9 @@ def _batch_keyword_scores(
         if not prune_terms:
             postings = postings.limit(0)
         else:
-            if "term_bucket" in postings.columns:
-                buckets = sorted({bm25_op.term_bucket_py(t) for t in prune_terms})
-                postings = postings.filter(F.col("term_bucket").isin(buckets))
-            postings = postings.filter(F.col("term").isin(list(prune_terms)))
+            postings = bm25_op.filter_terms(
+                postings, list(prune_terms), postings.columns
+            )
     qterms = queries.select(
         F.col(qid_col),
         F.explode(F.array_distinct(tokenize(F.col(qtext_col)))).alias("term"),
@@ -286,13 +286,9 @@ def _batch_keyword_scores(
     # doclen join (the classic denormalized posting payload)
     if "dl" not in matched.columns:
         matched = matched.join(idx.doclen, id_col)
-    scored_kw = matched.crossJoin(F.broadcast(idx.stats))
-    tf, dl = F.col("tf").cast("double"), F.col("dl").cast("double")
-    per_term = bm25_op.idf_expr(F.col("df").cast("double"), F.col("n")) * (
-        tf * (bm25_op.K1 + 1.0)
-    ) / (tf + bm25_op.K1 * (1.0 - bm25_op.B + bm25_op.B * dl / F.col("avgdl")))
     return (
-        scored_kw.withColumn("s", per_term)
+        matched.crossJoin(F.broadcast(idx.stats))
+        .withColumn("s", bm25_op._impact_expr())
         .groupBy(qid_col, id_col)
         .agg(F.sum("s").alias("bm25"))
     )
@@ -695,11 +691,12 @@ def hybrid_search_rrf(
 
     _, k = resolve_params(None, limit, settings)
     cand = apply_metadata_filters(docs, filters)
-    if bm25_index is not None and not filters:
-        kw = bm25_op.score_query_prebuilt(bm25_index, query_text)
-    else:
-        idx = bm25_op.build_index(cand, id_col, text_col)
-        kw = bm25_op.score_query(idx, query_text)
+    kw = bm25_op.score_query(
+        bm25_index
+        if bm25_index is not None and not filters
+        else bm25_op.build_index(cand, id_col, text_col),
+        query_text,
+    )
 
     def branch_ranks(scored, score_col, rank_col):
         top = (

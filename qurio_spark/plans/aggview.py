@@ -235,6 +235,18 @@ def refresh_agg_view(
         _check_hist_bounds(path, hist_bounds)
     if (states is None) == (delta is None):
         raise ValueError("pass exactly one of delta / states")
+    if states is not None:
+        # a pre-built frame is trusted to be partial_states' output;
+        # check its shape before anything commits (a missing or stray
+        # state column would otherwise merge into a corrupt view)
+        want = [*group_cols, "n", "s", "mn", "mx"]
+        want += ["hs"] * (distinct_col is not None)
+        want += ["hb"] * (hist_bounds is not None)
+        if sorted(states.columns) != sorted(want):
+            raise ValueError(
+                f"states columns {states.columns} do not match the "
+                f"partial_states shape {want} for this view definition"
+            )
     new = states if states is not None else partial_states(
         delta, group_cols, value_col, distinct_col, hist_bounds
     )

@@ -31,7 +31,7 @@ from qurio_spark.operators.similarity import brute_force_topk, ivf_topk
 def q_bm25_topk(spark, sf_dir):
     """Q2 alpha=0: pure keyword BM25 top-10."""
     docs = _t(spark, sf_dir, "documents")
-    scored = bm25_op.score_query_inline(docs, QUERY_TEXT)
+    scored = bm25_op.score_query(bm25_op.build_index(docs), QUERY_TEXT)
     return (
         scored.filter(F.col("bm25") > 0)
         .select("doc_id", stable_round("bm25", 4).alias("bm25"))
@@ -56,9 +56,9 @@ def q_bm25_maxscore(spark, sf_dir):
     # r15 note: persisting idx.postings here was measured SLOWER at the
     # bench SF (2.76 s vs 2.06 s median, reps=5 — the exploded-postings
     # cache build costs more than the shared-subtree recompute it
-    # saves); the r15 win is inside score_query_maxscore instead (one
-    # fused bounds+theta collect, term-bucket pruning).
-    scored = bm25_op.score_query_maxscore(idx, QUERY_TEXT, 20)
+    # saves); the r15 win is inside score_query's top-k plan instead
+    # (one fused bounds+theta collect, term-bucket pruning).
+    scored = bm25_op.score_query(idx, QUERY_TEXT, topk=20)
     from qurio_spark.operators.cachectl import propagate_caches
 
     return propagate_caches(
@@ -86,7 +86,7 @@ def q_bm25_blockmax(spark, sf_dir):
     sidecar None: the extra postings pass costs more than it saves);
     both paths pinned in tests/test_bm25_segments.py::TestBlockMax."""
     idx = _bm25_index_handle(spark, sf_dir, "documents")
-    scored = bm25_op.score_query_maxscore(idx, QUERY_TEXT, 20)
+    scored = bm25_op.score_query(idx, QUERY_TEXT, topk=20)
     from qurio_spark.operators.cachectl import propagate_caches
 
     return propagate_caches(
@@ -307,17 +307,13 @@ def q_bm25_incremental(spark, sf_dir):
     a monolithic rebuild, but appending a batch never rewrites old
     postings (the Lucene segment model on parquet; the 100 TB
     incremental-ingest shape)."""
-    from qurio_spark.operators.bm25 import (
-        build_segment,
-        merge_segments,
-        score_query_segmented,
-    )
+    from qurio_spark.operators.bm25 import build_segment, merge_segments
 
     docs = _t(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 3 != 0)
     delta = docs.filter(F.col("doc_id") % 3 == 0)
     merged = merge_segments([build_segment(base), build_segment(delta)])
-    scored = score_query_segmented(merged, QUERY_TEXT)
+    scored = bm25_op.score_query(merged, QUERY_TEXT)
     return (
         scored.filter(F.col("bm25") > 0)
         .select("doc_id", stable_round("bm25", 4).alias("bm25"))
@@ -331,9 +327,9 @@ def q_bm25_prebuilt(spark, sf_dir):
     partitioned by md5 term-bucket, query terms hashed driver-side so
     the scan prunes to <= |q| of 64 bucket directories then applies the
     pushed ``term IN``  filter — per-query cost O(sum df(t)), corpus
-    scanned zero times (operators/bm25.write_index/score_query_prebuilt)."""
+    scanned zero times (operators/bm25.write_index/score_query)."""
     idx = _bm25_index_handle(spark, sf_dir, "documents")
-    scored = bm25_op.score_query_prebuilt(idx, QUERY_TEXT)
+    scored = bm25_op.score_query(idx, QUERY_TEXT)
     return (
         scored.filter(F.col("bm25") > 0)
         .select("doc_id", stable_round("bm25", 4).alias("bm25"))
@@ -366,10 +362,9 @@ def register_search_sql(spark, sf_dir):
         )
 
     def _bm25(spark, query, k=10):
-        idx = bm25_op.build_index(
-            _t(spark, sf_dir, "documents"), "doc_id", "text"
+        scored = bm25_op.score_query(
+            bm25_op.build_index(_t(spark, sf_dir, "documents")), query
         )
-        scored = bm25_op.score_query(idx, query)
         return (
             scored.filter(F.col("bm25") > 0)
             .orderBy(F.desc(stable_round("bm25", 6)), F.asc("doc_id"))

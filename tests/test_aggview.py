@@ -520,6 +520,20 @@ class TestExactlyOnceRefresh:
         (r,) = read_agg_view(spark, path).collect()
         assert (r["n"], r["total_value"]) == (1, 1.0)
 
+    def test_malformed_states_refused_before_commit(self, spark, tmp_path):
+        """states= skips the partial-agg, so its shape is checked
+        against the view definition before any version is written."""
+        from qurio_spark.plans.snapshots import snap_versions
+
+        path = str(tmp_path / "v")
+        b = self._mk(spark, [("h1", "x", 1.0)])
+        refresh_agg_view(spark, path, b, ["event_type"], "value")
+        bad = partial_states(b, ["event_type"], "value").drop("mx")
+        with pytest.raises(ValueError, match="states columns"):
+            refresh_agg_view(spark, path, None, ["event_type"], "value",
+                             states=bad)
+        assert len(snap_versions(path)) == 1
+
     def test_distinct_apps_do_not_collide(self, spark, tmp_path):
         path = str(tmp_path / "v")
         keys = ["event_type"]

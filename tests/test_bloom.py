@@ -33,6 +33,15 @@ def test_outer_join_how_rejected(spark):
             bloom_semi_join(probe, build, "k", how=how)
 
 
+def test_zero_hashes_rejected(spark):
+    """k_hashes=0 would AND zero bit tests: the SQL form parsed an
+    empty ``()`` and the Column form accepted every key.  Both forms
+    must refuse it."""
+    for key in ("k", F.col("k")):
+        with pytest.raises(ValueError, match="k_hashes"):
+            bloom_might_contain(key, [0], m_bits=64, k_hashes=0)
+
+
 def test_large_bitmap_routes_through_arrow_stage(spark, monkeypatch):
     """Past BLOOM_LITERAL_MAX_WORDS the pre-filter must not inline the
     bitmap as a codegen literal (py4j-per-word build cost + task-binary

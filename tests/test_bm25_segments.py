@@ -16,8 +16,6 @@ from qurio_spark.operators.bm25 import (
     merge_segments,
     read_segments,
     score_query,
-    score_query_segmented,
-    score_query_segmented_pruned,
     write_segment,
 )
 
@@ -39,7 +37,7 @@ def test_segmented_matches_monolithic(spark, docs):
     base = docs.filter(F.col("doc_id") % 3 != 0)
     delta = docs.filter(F.col("doc_id") % 3 == 0)
     merged = merge_segments([build_segment(base), build_segment(delta)])
-    got = _scores(score_query_segmented(merged, QUERY))
+    got = _scores(score_query(merged, QUERY))
     want = _scores(score_query(build_index(docs), QUERY))
     assert got == want
     assert len(got) > 0
@@ -51,14 +49,15 @@ def test_three_way_and_skewed_split(spark, docs):
     segs = [
         build_segment(docs.filter(F.col("doc_id") % 7 == i)) for i in (0, 3)
     ] + [build_segment(docs.filter((F.col("doc_id") % 7).isin([1, 2, 4, 5, 6])))]
-    got = _scores(score_query_segmented(merge_segments(segs), QUERY))
+    got = _scores(score_query(merge_segments(segs), QUERY))
     want = _scores(score_query(build_index(docs), QUERY))
     assert got == want
 
 
 def test_persisted_segments_roundtrip_and_append(spark, docs, tmp_path):
     """Appending a segment writes ONLY its own directory; the merged
-    read scores like the monolithic rebuild (pruned path included)."""
+    read (term-bucket pruned, since persisted segments carry the
+    partition column) scores like the monolithic rebuild."""
     path = str(tmp_path / "bm25_segs")
     base = docs.filter(F.col("doc_id") % 3 != 0)
     delta = docs.filter(F.col("doc_id") % 3 == 0)
@@ -80,8 +79,7 @@ def test_persisted_segments_roundtrip_and_append(spark, docs, tmp_path):
 
     merged = read_segments(spark, path, ["seg0", "seg1"])
     want = _scores(score_query(build_index(docs), QUERY))
-    assert _scores(score_query_segmented(merged, QUERY)) == want
-    assert _scores(score_query_segmented_pruned(merged, QUERY)) == want
+    assert _scores(score_query(merged, QUERY)) == want
 
 
 def test_compaction_preserves_scores(spark, docs, tmp_path):
@@ -91,7 +89,7 @@ def test_compaction_preserves_scores(spark, docs, tmp_path):
     compact_segments(spark, path, ["a", "b"], "compacted")
     one = read_segments(spark, path, ["compacted"])
     want = _scores(score_query(build_index(docs), QUERY))
-    assert _scores(score_query_segmented_pruned(one, QUERY)) == want
+    assert _scores(score_query(one, QUERY)) == want
 
 
 def test_compaction_heals_missing_blockmax_sidecar(spark, docs, tmp_path):
@@ -118,7 +116,7 @@ def test_compaction_heals_missing_blockmax_sidecar(spark, docs, tmp_path):
     )
     assert got == want
     # and the healed segment scores exactly like the monolithic build
-    assert _scores(score_query_segmented_pruned(healed, QUERY)) == _scores(
+    assert _scores(score_query(healed, QUERY)) == _scores(
         score_query(build_index(docs), QUERY)
     )
 
@@ -131,7 +129,7 @@ def test_pruned_scan_has_partition_filters(spark, docs, tmp_path):
     path = str(tmp_path / "bm25_prune")
     write_segment(build_segment(docs), path, "s")
     idx = read_segments(spark, path, ["s"])
-    a = audit(score_query_segmented_pruned(idx, QUERY))
+    a = audit(score_query(idx, QUERY))
     assert a["partition_filters"] >= 2, a["plan"]
 
 
@@ -146,23 +144,17 @@ class TestMaxScore:
         return [(r["doc_id"], round(r["bm25"], 9)) for r in rows]
 
     def test_monolithic_lossless_on_real_corpus(self, spark, docs):
-        from qurio_spark.operators.bm25 import score_query_maxscore
-
         idx = build_index(docs)
         want = self._topk(score_query(idx, QUERY), 10)
-        got = self._topk(score_query_maxscore(idx, QUERY, 10), 10)
+        got = self._topk(score_query(idx, QUERY, topk=10), 10)
         assert got == want
 
     def test_segmented_lossless_on_real_corpus(self, spark, docs):
-        from qurio_spark.operators.bm25 import score_query_segmented_maxscore
-
         base = docs.filter(F.col("doc_id") % 3 != 0)
         delta = docs.filter(F.col("doc_id") % 3 == 0)
         merged = merge_segments([build_segment(base), build_segment(delta)])
-        want = self._topk(score_query_segmented(merged, QUERY), 10)
-        got = self._topk(
-            score_query_segmented_maxscore(merged, QUERY, 10), 10
-        )
+        want = self._topk(score_query(merged, QUERY), 10)
+        got = self._topk(score_query(merged, QUERY, topk=10), 10)
         assert got == want
 
     @pytest.fixture()
@@ -179,15 +171,11 @@ class TestMaxScore:
         return spark.createDataFrame(rows, "doc_id long, text string")
 
     def test_adversarial_high_df_prunes_and_stays_exact(self, spark, adversarial):
-        from qurio_spark.operators.bm25 import score_query_maxscore
-
         idx = build_index(adversarial)
         q = "zyzzyva the"
         want = self._topk(score_query(idx, q), 5)
         stats: dict = {}
-        got = self._topk(
-            score_query_maxscore(idx, q, 5, prune_stats=stats), 5
-        )
+        got = self._topk(score_query(idx, q, topk=5, prune_stats=stats), 5)
         assert got == want
         # the stopword must be classified non-essential and its
         # postings semi-join-filtered before the scoring aggregate
@@ -196,19 +184,15 @@ class TestMaxScore:
         assert stats["postings_scored"] < stats["postings_matched"] / 5, stats
 
     def test_adversarial_segmented_prunes_and_stays_exact(self, spark, adversarial):
-        from qurio_spark.operators.bm25 import score_query_segmented_maxscore
-
         segs = [
             build_segment(adversarial.filter(F.col("doc_id") % 2 == i))
             for i in (0, 1)
         ]
         merged = merge_segments(segs)
         q = "zyzzyva the"
-        want = self._topk(score_query_segmented(merged, q), 5)
+        want = self._topk(score_query(merged, q), 5)
         stats: dict = {}
-        got = self._topk(
-            score_query_segmented_maxscore(merged, q, 5, prune_stats=stats), 5
-        )
+        got = self._topk(score_query(merged, q, topk=5, prune_stats=stats), 5)
         assert got == want
         assert "the" in stats["non_essential"]
         assert stats["postings_scored"] < stats["postings_matched"] / 5, stats
@@ -216,10 +200,8 @@ class TestMaxScore:
     def test_fewer_matches_than_topk_disables_pruning(self, spark, adversarial):
         """theta needs topk exact partials; with a rarer-than-k term
         the scorer must fall back to full scoring, not over-prune."""
-        from qurio_spark.operators.bm25 import score_query_maxscore
-
         idx = build_index(adversarial)
-        got = self._topk(score_query_maxscore(idx, "zyzzyva the", 50), 50)
+        got = self._topk(score_query(idx, "zyzzyva the", topk=50), 50)
         want = self._topk(score_query(idx, "zyzzyva the"), 50)
         assert got == want
 
@@ -282,10 +264,7 @@ class TestBlockMax:
         self, spark, block_skewed, monkeypatch
     ):
         import qurio_spark.operators.bm25 as bm25_mod
-        from qurio_spark.operators.bm25 import (
-            score_query_maxscore,
-            term_block_max_impacts,
-        )
+        from qurio_spark.operators.bm25 import term_block_max_impacts
 
         corpus, strong_block, strong_ids = block_skewed
         idx = build_index(corpus)
@@ -299,14 +278,12 @@ class TestBlockMax:
         # plain MaxScore baseline: block pruning neutralized
         plain: dict = {}
         monkeypatch.setattr(bm25_mod, "_alive_blocks", lambda *a: None)
-        got_plain = self._topk(
-            score_query_maxscore(idx, q, 2, prune_stats=plain), 2
-        )
+        got_plain = self._topk(score_query(idx, q, topk=2, prune_stats=plain), 2)
         monkeypatch.undo()
         assert got_plain == want
 
         bmw: dict = {}
-        got = self._topk(score_query_maxscore(idx, q, 2, prune_stats=bmw), 2)
+        got = self._topk(score_query(idx, q, topk=2, prune_stats=bmw), 2)
         assert got == want  # lossless
         assert bmw["alive_blocks"] == [strong_block]
         assert bmw["postings_scored"] < plain["postings_scored"], (bmw, plain)
@@ -318,7 +295,6 @@ class TestBlockMax:
         segment split that separates the strong docs — pruning and
         scores identical to the unsplit run."""
         import qurio_spark.operators.bm25 as bm25_mod
-        from qurio_spark.operators.bm25 import score_query_segmented_maxscore
 
         corpus, strong_block, strong_ids = block_skewed
         merged = merge_segments([
@@ -326,28 +302,25 @@ class TestBlockMax:
             build_segment(corpus.filter(F.col("doc_id") % 2 == 1)),
         ])
         q = "rare common"
-        want = self._topk(score_query_segmented(merged, q), 2)
+        want = self._topk(score_query(merged, q), 2)
 
         plain: dict = {}
         monkeypatch.setattr(bm25_mod, "_alive_blocks", lambda *a: None)
-        # segmented path computes blocks inline; neutralize via blockdf
+        # and with no sidecar the bounds are never derived at all
         stripped = merge_segments([
             build_segment(corpus.filter(F.col("doc_id") % 2 == 0)),
             build_segment(corpus.filter(F.col("doc_id") % 2 == 1)),
         ])
         stripped.blockdf = None
         got_plain = self._topk(
-            score_query_segmented_maxscore(stripped, q, 2, prune_stats=plain),
-            2,
+            score_query(stripped, q, topk=2, prune_stats=plain), 2
         )
         monkeypatch.undo()
         assert got_plain == want
         assert plain["alive_blocks"] is None
 
         bmw: dict = {}
-        got = self._topk(
-            score_query_segmented_maxscore(merged, q, 2, prune_stats=bmw), 2
-        )
+        got = self._topk(score_query(merged, q, topk=2, prune_stats=bmw), 2)
         assert got == want
         assert bmw["alive_blocks"] == [strong_block]
         assert bmw["postings_scored"] < plain["postings_scored"], (bmw, plain)
@@ -357,8 +330,6 @@ class TestBlockMax:
     ):
         """Merging one pre-sidecar segment poisons the additive bound,
         so the merge must drop to plain MaxScore — never a wrong UB."""
-        from qurio_spark.operators.bm25 import score_query_segmented_maxscore
-
         corpus, _, _ = block_skewed
         old = build_segment(corpus.filter(F.col("doc_id") % 2 == 0))
         old.blockdf = None
@@ -368,20 +339,14 @@ class TestBlockMax:
         assert merged.blockdf is None
         q = "rare common"
         stats: dict = {}
-        got = self._topk(
-            score_query_segmented_maxscore(merged, q, 2, prune_stats=stats), 2
-        )
-        assert got == self._topk(score_query_segmented(merged, q), 2)
+        got = self._topk(score_query(merged, q, topk=2, prune_stats=stats), 2)
+        assert got == self._topk(score_query(merged, q), 2)
         assert stats["alive_blocks"] is None
 
     def test_persisted_index_roundtrips_blockmax(
         self, spark, block_skewed, tmp_path
     ):
-        from qurio_spark.operators.bm25 import (
-            read_index,
-            score_query_maxscore,
-            write_index,
-        )
+        from qurio_spark.operators.bm25 import read_index, write_index
 
         corpus, strong_block, _ = block_skewed
         path = str(tmp_path / "bmw_idx")
@@ -391,19 +356,16 @@ class TestBlockMax:
         assert "doc_block" in idx.postings.columns
         q = "rare common"
         stats: dict = {}
-        got = self._topk(score_query_maxscore(idx, q, 2, prune_stats=stats), 2)
+        got = self._topk(score_query(idx, q, topk=2, prune_stats=stats), 2)
         assert got == self._topk(score_query(idx, q), 2)
         assert stats["alive_blocks"] == [strong_block]
 
 
 class TestMaxScoreSliceCache:
     def test_slice_cache_attached_and_released(self, spark):
-        """r15: score_query_maxscore persists the query-term postings
-        slice (its three consumers shared no subtree before); the
-        handle must ride the returned frame and release cleanly."""
-        from pyspark.sql import functions as F
-
-        from qurio_spark.operators.bm25 import build_index, score_query_maxscore
+        """The top-k plan persists the query-term postings slice (its
+        three consumers share no other subtree); the handle must ride
+        the returned frame and release cleanly."""
         from qurio_spark.operators.cachectl import cached_frames, release_caches
 
         docs = spark.createDataFrame(
@@ -411,7 +373,7 @@ class TestMaxScoreSliceCache:
             "doc_id int, text string",
         )
         idx = build_index(docs)
-        out = score_query_maxscore(idx, "alpha doc1", 5)
+        out = score_query(idx, "alpha doc1", topk=5)
         frames = cached_frames(out)
         assert len(frames) == 1  # exactly the filtered slice
         assert frames[0].storageLevel.useMemory  # actually persisted

@@ -496,7 +496,7 @@ class TestOcrConvertPipeline:
 
     def test_ocr_to_chunk_to_search(self, spark, server):
         from qurio_spark.functions.providers import HttpOcrProvider
-        from qurio_spark.operators.bm25 import score_query_inline
+        from qurio_spark.operators.bm25 import build_index, score_query
         from qurio_spark.plans.pipeline import build_chunks
         from qurio_spark.sources.multimodal import (
             convert_files,
@@ -521,10 +521,12 @@ class TestOcrConvertPipeline:
 
         docs = uploads_to_docs_raw(converted, "uploads")
         chunks = build_chunks(docs)
-        hits = score_query_inline(
-            chunks.select(
-                F.concat_ws("#", "url", "chunk_index").alias("doc_id"),
-                F.col("content").alias("text"),
+        hits = score_query(
+            build_index(
+                chunks.select(
+                    F.concat_ws("#", "url", "chunk_index").alias("doc_id"),
+                    F.col("content").alias("text"),
+                )
             ),
             "zymurgy process",
         ).filter(F.col("bm25") > 0).collect()

@@ -55,30 +55,30 @@ def _bm25_py(corpus, query, k1=1.2, b=0.75):
     return scores
 
 
+def _bm25_scores(docs, query):
+    """Sparse {doc_id: bm25} — documents matching no term are absent."""
+    idx = bm25_op.build_index(docs)
+    return {r["doc_id"]: r["bm25"] for r in bm25_op.score_query(idx, query).collect()}
+
+
 class TestBM25:
     def test_matches_hand_computation(self, spark, docs):
-        got = {
-            r["doc_id"]: r["bm25"]
-            for r in bm25_op.score_query_inline(docs, "spark join").collect()
-        }
+        got = _bm25_scores(docs, "spark join")
         want = _bm25_py(CORPUS, "spark join")
-        assert set(got) == set(want)
+        assert set(got) == {d for d, s in want.items() if s > 0}
         for k in want:
-            assert got[k] == pytest.approx(want[k], rel=1e-9), k
+            assert got.get(k, 0.0) == pytest.approx(want[k], rel=1e-9), k
 
     def test_term_frequency_saturation(self, spark, docs):
-        scores = {
-            r["doc_id"]: r["bm25"]
-            for r in bm25_op.score_query_inline(docs, "spark").collect()
-        }
+        scores = _bm25_scores(docs, "spark")
         # doc 2 repeats 'spark' 3x -> higher than doc 0 (1x), but k1
         # saturation keeps it < 3x ratio
         assert scores[2] > scores[0] > 0
         assert scores[2] < 3 * scores[0]
-        assert scores[1] == 0.0
+        assert scores.get(1, 0.0) == 0.0
 
     def test_empty_query(self, spark, docs):
-        assert bm25_op.score_query_inline(docs, "???").filter("bm25 > 0").count() == 0
+        assert _bm25_scores(docs, "???") == {}
 
 
 class TestVectorSearch:
@@ -99,6 +99,15 @@ class TestVectorSearch:
             vec = [float(x) for x in docs.filter(F.col("doc_id") == r["doc_id"]).first()["embedding"]]
             want = float(np.dot(vec, q) / (np.linalg.norm(vec) * np.linalg.norm(q)))
             assert r["c"] == pytest.approx(want, abs=1e-6)
+
+
+def test_literal_vector_keeps_negative_zero(spark):
+    """The parsed-SQL literal must be bit-identical to the composed
+    F.lit form, including the sign bit of -0.0."""
+    vec = [1.5, -0.0, 0.0, -2.25e-07]
+    got = spark.range(1).select(literal_vector(vec).alias("v")).first()["v"]
+    assert [math.copysign(1.0, x) for x in got] == [1.0, -1.0, 1.0, -1.0]
+    assert got == vec
 
 
 class TestHybrid:
@@ -186,10 +195,7 @@ class TestPersistentBM25Index:
 
         q = "spark join"
         live = {r["doc_id"]: r["bm25"] for r in bm25_op.score_query(idx, q).collect()}
-        pre = {
-            r["doc_id"]: r["bm25"]
-            for r in bm25_op.score_query_prebuilt(stored, q).collect()
-        }
+        pre = {r["doc_id"]: r["bm25"] for r in bm25_op.score_query(stored, q).collect()}
         assert set(live) == set(pre)
         for d in live:
             assert live[d] == pytest.approx(pre[d], abs=1e-12)
@@ -215,7 +221,7 @@ class TestPersistentBM25Index:
         path = str(tmp_path / "bm25_idx3")
         bm25_op.write_index(idx, path)
         stored = bm25_op.read_index(spark, path)
-        assert bm25_op.score_query_prebuilt(stored, "!!!").count() == 0
+        assert bm25_op.score_query(stored, "!!!").count() == 0
 
 
 class TestBatchHybridIVF:
@@ -683,8 +689,8 @@ class TestHybridRRF:
         }
 
         # reference ranks straight from the branch scorers
-        kw = bm25_op.score_query_inline(
-            docs.select("doc_id", "text"), m.QUERY_TEXT
+        kw = bm25_op.score_query(
+            bm25_op.build_index(docs.select("doc_id", "text")), m.QUERY_TEXT
         )
         brows = (
             kw.filter("bm25 > 0")
